@@ -1,6 +1,8 @@
 package graft.ann
 
+import graft.dedup.Candidates
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table
@@ -12,25 +14,16 @@ import org.apache.spark.sql.functions._
   *    partial top-k per partition via window after repartition by query.
   *    This is the correctness baseline and is how you'd score ≤ a few
   *    thousand queries against 10⁹ vectors on a cluster.
-  *  - [[lshBuckets]] / [[lshTopK]]: sign-random-projection LSH — each
-  *    vector is bucketed by the sign pattern of `nPlanes` deterministic
-  *    hyperplanes; candidates = same-bucket vectors only. The scale path:
-  *    the corpus-side shuffle is keyed by bucket, queries only meet
-  *    their bucket.
+  *  - [[lshBuckets]] / [[lshTopKMulti]]: sign-random-projection LSH —
+  *    each vector is bucketed by the sign pattern of `nPlanes`
+  *    deterministic hyperplanes; candidates = same-bucket vectors only.
+  *    The scale path: the corpus-side shuffle is keyed by bucket, queries
+  *    only meet their bucket.
   *
-  * Dot products use sequential double folds (aggregate over zip_with) so
+  * Cosines are sequential double folds ([[graft.functions.CosineSim]]) so
   * results are bit-reproducible and engine-portable.
   */
 object Similarity {
-
-  /** Sequential-fold dot product of two double arrays (bit-deterministic).
-    * Kept as the reference formulation; the hot paths use the fused
-    * [[graft.functions.CosineSim]] expression with identical fold order.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine via the compiled [[graft.functions.CosineSim]] loop — HOF
     * lambdas evaluate interpreted per element (measured: ann_ivf_topk
@@ -42,6 +35,15 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
+  /** The `k` best neighbors per query of scored (q, neighbor, sim) rows,
+    * ties broken by lowest neighbor id. Output: (q, rank, neighbor).
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy("q").orderBy(col("sim").desc, col("neighbor").asc)))
+      .filter(col("rank") <= k)
+      .select(col("q"), col("rank"), col("neighbor"))
+
   /** Exact top-k neighbors for each query vector (queries = vec_id ∈
     * querySet), excluding self. Output: (q, rank, neighbor).
     */
@@ -50,15 +52,9 @@ object Similarity {
       emb.filter(col("vec_id").isin(queryIds: _*))
         .select(col("vec_id").as("q"), asDouble(col("embedding")).as("q_emb")))
     val cands = emb.select(col("vec_id").as("neighbor"), asDouble(col("embedding")).as("c_emb"))
-    val scored = cands.join(queries, col("q") =!= col("neighbor"))
-      .select(col("q"), col("neighbor"), cosine(col("q_emb"), col("c_emb")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q").orderBy(col("sim").desc, col("neighbor").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q"), col("rank"), col("neighbor"))
+    topK(cands.join(queries, col("q") =!= col("neighbor"))
+      .select(col("q"), col("neighbor"), cosine(col("q_emb"), col("c_emb")).as("sim")), k)
   }
-
 
   /** Sign-random-projection bucket id: one bit per hyperplane, via the
     * fused [[graft.functions.SrpBucket]] loop (the HOF form re-derived
@@ -68,6 +64,17 @@ object Similarity {
     */
   def lshBucket(embDouble: Column, nPlanes: Int, planeOffset: Int = 0): Column =
     graft.functions.SrpBucket(embDouble, nPlanes, planeOffset)
+
+  /** (vec_id, t, bucket): the bucket of every vector in each of `nTables`
+    * independent SRP plane families of `nPlanes` planes — a NARROW table;
+    * `base` carries (vec_id, emb: array<double>).
+    */
+  private def srpTables(base: DataFrame, nPlanes: Int, nTables: Int): DataFrame =
+    base.select(col("vec_id"),
+      explode(array((0 until nTables).map(t =>
+        struct(lit(t).as("t"),
+          lshBucket(col("emb"), nPlanes, t * nPlanes).as("bucket"))): _*)).as("tb"))
+      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
 
   /** Multi-table SRP-LSH top-k: `nTables` independent plane families,
     * candidates = union of same-bucket matches across tables, then exact
@@ -82,20 +89,15 @@ object Similarity {
     * (queries broadcast); the corpus explodes only a NARROW
     * (vec_id, table, bucket) triple — embeddings are joined back
     * per-candidate after the distinct, the same narrow-pair discipline as
-    * [[graft.dedup.Dedup.simhashCandidates]].
+    * [[graft.dedup.Candidates]].
     * Output: (q, rank, neighbor).
     */
   def lshTopKMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
       nPlanes: Int = 4, nTables: Int = 8): DataFrame = {
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
     // materialized once — referenced by the corpus side AND the broadcast
-    // query side (see cosineNearDup)
-    val tabled = base.select(col("vec_id"),
-      explode(array((0 until nTables).map(t =>
-        struct(lit(t).as("t"),
-          lshBucket(col("emb"), nPlanes, t * nPlanes).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-      .localCheckpoint()
+    // query side, which would otherwise re-run the projection pass
+    val tabled = srpTables(base, nPlanes, nTables).localCheckpoint()
     val qTabled = broadcast(tabled
       .filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q"), col("t"), col("bucket")))
@@ -104,40 +106,16 @@ object Similarity {
       .select(col("q"), col("vec_id").as("neighbor")).distinct()
     val qEmb = broadcast(base.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q"), col("emb").as("q_emb")))
-    val scored = cand
+    topK(cand
       .join(base.select(col("vec_id").as("neighbor"), col("emb").as("n_emb")), "neighbor")
       .join(qEmb, "q")
-      .select(col("q"), col("neighbor"), cosine(col("q_emb"), col("n_emb")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q").orderBy(col("sim").desc, col("neighbor").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q"), col("rank"), col("neighbor"))
+      .select(col("q"), col("neighbor"), cosine(col("q_emb"), col("n_emb")).as("sim")), k)
   }
 
   /** (vec_id, bucket) for the whole corpus. */
   def lshBuckets(emb: DataFrame, nPlanes: Int = 8): DataFrame =
     emb.select(col("vec_id"),
       lshBucket(asDouble(col("embedding")), nPlanes).as("bucket"))
-
-  /** Approximate top-k: exact cosine ranking restricted to the query's LSH
-    * bucket. Recall depends on nPlanes; candidates shrink ~2^nPlanes-fold.
-    */
-  def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, nPlanes: Int = 8): DataFrame = {
-    val bucketed = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("bucket", lshBucket(col("emb"), nPlanes))
-    val queries = broadcast(bucketed.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("q"), col("emb").as("q_emb"), col("bucket")))
-    val scored = bucketed.join(queries, Seq("bucket"))
-      .filter(col("q") =!= col("vec_id"))
-      .select(col("q"), col("vec_id").as("neighbor"),
-        cosine(col("q_emb"), col("emb")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q").orderBy(col("sim").desc, col("neighbor").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q"), col("rank"), col("neighbor"))
-  }
 
   /** Deterministic distributed k-means training for the IVF coarse
     * quantizer (VERDICT r01 #8 — the r01 "first 16 vectors as centers"
@@ -188,13 +166,8 @@ object Similarity {
       // cent_id); cosines are the same fused fold, so assignments are
       // bit-identical and the trained codebook unchanged (oracle-checked
       // by every ann_ivf_*/ann_semdedup_* row).
-      val centArr = cents.agg(
-        array_sort(collect_list(struct(col("cent_id"), col("cent_emb")))).as("cent_arr"))
-      val best = array_max(transform(col("cent_arr"), c =>
-        struct(cosine(col("emb"), c.getField("cent_emb")).as("s"),
-          (-c.getField("cent_id")).as("negid"))))
-      val assigned = sample.join(broadcast(centArr))
-        .select(col("vec_id"), col("emb"), (-best.getField("negid")).as("cent_id"))
+      val assigned = sample.join(broadcast(codebook(cents)))
+        .select(col("vec_id"), col("emb"), bestCentroid(col("emb")).as("cent_id"))
       val rebuilt = assigned
         .select(col("cent_id"), posexplode(col("emb")).as(Seq("p", "x")))
         .groupBy("cent_id", "p")
@@ -223,16 +196,29 @@ object Similarity {
     * oracle because the cosine is the same sequential fold.
     * Output: (vec_id, emb, cent_id).
     */
-  def assignCentroids(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val centArr = cents.agg(
-      array_sort(collect_list(struct(col("cent_id"), col("cent_emb")))).as("cent_arr"))
-    val best = array_max(transform(col("cent_arr"), c =>
-      struct(cosine(col("emb"), c.getField("cent_emb")).as("s"),
-        (-c.getField("cent_id")).as("negid"))))
+  def assignCentroids(emb: DataFrame, cents: DataFrame): DataFrame =
     emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .join(broadcast(centArr))
-      .select(col("vec_id"), col("emb"), (-best.getField("negid")).as("cent_id"))
-  }
+      .join(broadcast(codebook(cents)))
+      .select(col("vec_id"), col("emb"), bestCentroid(col("emb")).as("cent_id"))
+
+  /** The codebook as ONE row: `cent_arr`, its (cent_id, cent_emb) structs
+    * sorted by cent_id — broadcast onto the corpus for row-local scoring.
+    */
+  private def codebook(cents: DataFrame): DataFrame =
+    cents.agg(
+      array_sort(collect_list(struct(col("cent_id"), col("cent_emb")))).as("cent_arr"))
+
+  /** Per-centroid (s = cosine of `emb`, negid = -cent_id) structs over the
+    * broadcast `cent_arr`: struct order is (score ASC, cent_id DESC), so
+    * the max is the best centroid with ties to the lowest cent_id.
+    */
+  private def centScores(emb: Column): Column =
+    transform(col("cent_arr"), c =>
+      struct(cosine(emb, c.getField("cent_emb")).as("s"),
+        (-c.getField("cent_id")).as("negid")))
+
+  private def bestCentroid(emb: Column): Column =
+    -array_max(centScores(emb)).getField("negid")
 
   /** Materialize the trained codebook (k rows — bounded by nCentroids,
     * never by the corpus) into a LocalRelation. Every downstream consumer
@@ -261,8 +247,7 @@ object Similarity {
     */
   def ivfProbes(emb: DataFrame, cents: DataFrame, queryIds: Seq[Long],
       nProbe: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("cscore").desc, col("cent_id").asc)
+    val w = Window.partitionBy("vec_id").orderBy(col("cscore").desc, col("cent_id").asc)
     emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .join(broadcast(cents))
@@ -284,14 +269,9 @@ object Similarity {
       .select(col("cent_id"), col("vec_id").as("neighbor"), col("emb").as("c_emb"))
     val probes = broadcast(ivfProbes(emb, cents, queryIds, nProbe)
       .select(col("vec_id").as("q"), col("emb").as("q_emb"), col("cent_id")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q").orderBy(col("sim").desc, col("neighbor").asc)
-    lists.join(probes, Seq("cent_id"))
+    topK(lists.join(probes, Seq("cent_id"))
       .filter(col("q") =!= col("neighbor"))
-      .select(col("q"), col("neighbor"), cosine(col("q_emb"), col("c_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q"), col("rank"), col("neighbor"))
+      .select(col("q"), col("neighbor"), cosine(col("q_emb"), col("c_emb")).as("sim")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs at `threshold`, multi-table
@@ -300,40 +280,29 @@ object Similarity {
     * plane families lift per-pair recall to 1 − (1 − p^nPlanes)^nTables,
     * measured by `ann_neardup_recall`).
     *
-    * Scale shape — the narrow-pair discipline of
-    * [[graft.dedup.Dedup.simhashCandidates]]: the bucketed self-join
-    * exchanges only (t, bucket, vec_id) triples, candidate (a, b) pairs
-    * are DISTINCT'd while still narrow, and the full embedding arrays are
-    * joined back only once per surviving candidate for the cosine verify.
-    * The corpus never self-cross-joins and never shuffles its payload
-    * into the quadratic stage (plan-asserted in PlanSpec).
+    * Scale shape: [[graft.dedup.Candidates.pairs]] over the narrow
+    * (t, bucket, vec_id) triples (eager: materializes them), then the
+    * embeddings join back once per distinct candidate for the cosine
+    * verify. The payload never enters the quadratic stage (plan-asserted
+    * in PlanSpec).
     */
   def cosineNearDup(emb: DataFrame, threshold: Double,
       nPlanes: Int = 4, nTables: Int = 16): DataFrame = {
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    // narrow (vec_id, t, bucket) assignment table materialized once: both
-    // self-join sides reference it, and the broadcast/build side would
-    // otherwise re-run the nTables x nPlanes projection pass over the
-    // corpus (same rationale as the simhash fingerprint materialization)
-    val tabled = base.select(col("vec_id"),
-      explode(array((0 until nTables).map(t =>
-        struct(lit(t).as("t"),
-          lshBucket(col("emb"), nPlanes, t * nPlanes).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-      .localCheckpoint()
-    val l = tabled.select(col("t"), col("bucket"), col("vec_id").as("a"))
-    val r = tabled.select(col("t").as("t_r"), col("bucket").as("bucket_r"),
-      col("vec_id").as("b"))
-    val cand = l.join(r,
-        l("t") === r("t_r") && l("bucket") === r("bucket_r") && l("a") < r("b"))
-      .select("a", "b").distinct()
-    cand
-      .join(base.select(col("vec_id").as("a"), col("emb").as("emb_a")), "a")
-      .join(base.select(col("vec_id").as("b"), col("emb").as("emb_b")), "b")
+    cosineVerified(
+      Candidates.pairs(srpTables(base, nPlanes, nTables), Seq("t", "bucket"), "vec_id"),
+      base, threshold)
+  }
+
+  /** The candidate pairs whose embeddings (`base`: vec_id, emb) have
+    * cosine ≥ `threshold`. Output: (a, b).
+    */
+  private def cosineVerified(cand: DataFrame, base: DataFrame,
+      threshold: Double): DataFrame =
+    Candidates.withEnds(cand, base, "vec_id", "emb")
       .select(col("a"), col("b"), cosine(col("emb_a"), col("emb_b")).as("sim"))
       .filter(col("sim") >= threshold)
       .select("a", "b")
-  }
 
   /** Norm-relative int8 scalar quantization: q[i] = round(127·x[i] / max|x|),
     * stored as `array<tinyint>` — 1 byte/element in Tungsten rows and
@@ -370,15 +339,10 @@ object Similarity {
       quantizeInt8(asDouble(col("embedding"))).as("q8"))
     val queries = broadcast(q8.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q"), col("q8").as("q_q8")))
-    val scored = q8.select(col("vec_id").as("neighbor"), col("q8").as("c_q8"))
+    topK(q8.select(col("vec_id").as("neighbor"), col("q8").as("c_q8"))
       .join(queries, col("q") =!= col("neighbor"))
       .select(col("q"), col("neighbor"),
-        cosine(asDouble(col("q_q8")), asDouble(col("c_q8"))).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q").orderBy(col("sim").desc, col("neighbor").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q"), col("rank"), col("neighbor"))
+        cosine(asDouble(col("q_q8")), asDouble(col("c_q8"))).as("sim")), k)
   }
 
   /** SemDeDup-style semantic deduplication pairs: cluster the corpus with
@@ -397,8 +361,9 @@ object Similarity {
     * Scale shape: probe assignment is ROW-LOCAL (the same broadcast-
     * codebook per-centroid score array as [[assignCentroids]], sliced to
     * the top `nProbe` — the corpus is never exchanged to find its
-    * clusters); the candidate self-join exchanges only narrow
-    * (cent_id, vec_id) pairs (plan-asserted); embeddings join back once
+    * clusters); the [[graft.dedup.Candidates.pairs]] self-join (eager)
+    * exchanges only narrow (cent_id, vec_id) pairs (plan-asserted);
+    * embeddings join back once
     * per DISTINCT surviving candidate for the verify. At N vectors pick
     * nCentroids ∝ N/m for a target cluster size m, so per-cluster
     * quadratic work stays m²-bounded while assignment stays one broadcast.
@@ -409,31 +374,14 @@ object Similarity {
       nCentroids: Int = 16, nProbe: Int = 2): DataFrame = {
     val cents = materializeCentroids(trainCentroids(emb, nCentroids))
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    val centArr = cents.agg(
-      array_sort(collect_list(struct(col("cent_id"), col("cent_emb")))).as("cent_arr"))
-    // ascending array_sort by (score, -cent_id) then reverse = the
-    // (cscore DESC, cent_id ASC) window order, computed without a shuffle
-    val scored = transform(col("cent_arr"), c =>
-      struct(cosine(col("emb"), c.getField("cent_emb")).as("s"),
-        (-c.getField("cent_id")).as("negid")))
-    // narrow (cent_id, vec_id) probe-assignment table materialized once:
-    // both self-join sides reference it, and the build side would
-    // otherwise re-run the k-cosine row-local assignment over the corpus
-    val probed = base.join(broadcast(centArr))
+    // narrow (cent_id, vec_id) probe assignments; ascending array_sort by
+    // (score, -cent_id) then reverse = the (cscore DESC, cent_id ASC)
+    // window order, computed without a shuffle
+    val probed = base.join(broadcast(codebook(cents)))
       .select(col("vec_id"),
-        explode(slice(reverse(array_sort(scored)), 1, nProbe)).as("pc"))
+        explode(slice(reverse(array_sort(centScores(col("emb")))), 1, nProbe)).as("pc"))
       .select((-col("pc.negid")).as("cent_id"), col("vec_id"))
-      .localCheckpoint()
-    val l = probed.select(col("cent_id"), col("vec_id").as("a"))
-    val r = probed.select(col("cent_id").as("cent_id_r"), col("vec_id").as("b"))
-    val cand = l.join(r, l("cent_id") === r("cent_id_r") && l("a") < r("b"))
-      .select("a", "b").distinct()
-    cand
-      .join(base.select(col("vec_id").as("a"), col("emb").as("emb_a")), "a")
-      .join(base.select(col("vec_id").as("b"), col("emb").as("emb_b")), "b")
-      .select(col("a"), col("b"), cosine(col("emb_a"), col("emb_b")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select("a", "b")
+    cosineVerified(Candidates.pairs(probed, Seq("cent_id"), "vec_id"), base, threshold)
   }
 
   /** Exact near-duplicate ground truth: ALL pairs with cosine ≥

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: nothing here is O(n²) over the corpus. Exact dedup is one
   * hash aggregation; MinHash/SimHash candidate generation is
-  * explode-by-band + equi-self-join on the band bucket (shuffle keyed by
-  * band hash, so only colliding docs ever meet), and the verify step runs
-  * per candidate pair. At 100 TB the band join is the dominant shuffle and
-  * is bounded by bucket sizes, not corpus size.
+  * explode-by-band + the [[Candidates]] equi-self-join on the band bucket
+  * (shuffle keyed by band hash, so only colliding docs ever meet), and the
+  * verify step runs per candidate pair. At 100 TB the band join is the
+  * dominant shuffle and is bounded by bucket sizes, not corpus size.
   *
   * All hashing is md5-derived integer arithmetic (engine-portable, exact):
   * h(s) = int(md5(s)[0:8], 16) ∈ [0, 2^32); permutations
@@ -78,44 +78,21 @@ object Dedup {
     */
   val DefaultMaxBucket = 64
 
-  /** Distinct candidate pairs (a < b) from shared LSH band buckets.
+  /** Distinct candidate pairs (a < b) from shared LSH band buckets, via
+    * [[Candidates.pairs]] (eager: materializes the banded table).
     *
     * `maxBucket` caps the per-bucket membership BEFORE the self-join: a
     * bucket of m docs yields m²/2 pairs, so one pathological bucket (a
     * corpus with millions of near-identical boilerplate docs) would go
     * quadratic at 100 TB (VERDICT r01). The cap keeps the `maxBucket`
-    * LOWEST doc_ids per bucket — deterministic (oracle-replicable with a
-    * windowed row_number) and dedup-sound: docs in an over-full bucket are
-    * near-identical by construction, so the survivors still link the
-    * cluster while the pruned members are re-found through their OTHER
-    * bands or transitively via the keeper. Uncapped (`Int.MaxValue`) is
-    * the OPT-IN (graded by `dedup_minhash_pairs_uncapped`).
+    * LOWEST doc_ids per bucket, which is dedup-sound: docs in an over-full
+    * bucket are near-identical by construction, so the survivors still
+    * link the cluster while the pruned members are re-found through their
+    * OTHER bands or transitively via the keeper. Uncapped (`Int.MaxValue`)
+    * is the OPT-IN (graded by `dedup_minhash_pairs_uncapped`).
     */
-  def minhashCandidates(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val bandsRaw = minhashBands(docs)
-    // Materialize the NARROW banded table once: the candidate self-join
-    // references it on BOTH sides, and the build side is a
-    // BroadcastExchange whose subtree re-executes — i.e. the whole
-    // shingle+MinHash md5 pass ran twice per query (AQE stage reuse only
-    // covers shuffle exchanges). Same narrow-intermediate materialization
-    // as the simhash fingerprint table; rows are (doc_id, band_idx,
-    // band_hash), bucket-capped, bounded well below the corpus payload.
-    val bands = (
-      if (maxBucket == Int.MaxValue) bandsRaw
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("band_idx", "band_hash").orderBy("doc_id")
-        bandsRaw.withColumn("bucket_rank", row_number().over(w))
-          .filter(col("bucket_rank") <= maxBucket)
-          .drop("bucket_rank")
-      }).localCheckpoint()
-    val l = bands.select(col("band_idx"), col("band_hash"), col("doc_id").as("a"))
-    val r = bands.select(col("band_idx").as("band_idx_r"),
-      col("band_hash").as("band_hash_r"), col("doc_id").as("b"))
-    l.join(r, l("band_idx") === r("band_idx_r") &&
-        l("band_hash") === r("band_hash_r") && l("a") < r("b"))
-      .select("a", "b").distinct()
-  }
+  def minhashCandidates(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
+    Candidates.pairs(minhashBands(docs), Seq("band_idx", "band_hash"), "doc_id", maxBucket)
 
   /** Candidate pairs + exact shingle-set Jaccard as integer
     * intersection/union sizes (is_dup at threshold 0.8 via 10·∩ ≥ 8·∪ —
@@ -124,9 +101,7 @@ object Dedup {
   def ngramJaccard(docs: DataFrame): DataFrame = {
     val sh = docs.filter(size(TextAnalysis.tokens(col("text"))) >= 3)
       .select(col("doc_id"), shingles(col("text")).as("sh"))
-    minhashCandidates(docs)
-      .join(sh.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
-      .join(sh.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
+    Candidates.withEnds(minhashCandidates(docs), sh, "doc_id", "sh")
       .select(col("a"), col("b"),
         size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
         size(array_union(col("sh_a"), col("sh_b"))).as("uni"))
@@ -161,47 +136,23 @@ object Dedup {
     // different block-combination family.
     require(maxHamming <= 6, s"band-pair keys cover hamming <= 6, got $maxHamming")
     // Materialize the NARROW fingerprint table (16 B/doc) once: it feeds
-    // the banding explode AND both sides of the verify join-back, and each
+    // the banding explode AND both ends of the verify join-back, and each
     // reference otherwise re-runs the full tokenize+md5 SimHash pass over
-    // the corpus (three passes total). Materializing the fingerprint
-    // table is also the honest 100 TB shape — it is exactly what a
+    // the corpus. It is also the honest 100 TB shape — exactly what a
     // deployment persists between candidate generation and verification.
     val sh = simhashDocs(docs).localCheckpoint()
-    // Block-combination keys (the published web-scale simhash indexing
-    // trick): key on PAIRS of 8-bit bands — C(8,2) = 28 keys of 16 bits
-    // each. Single 8-bit bands give only 256 buckets per band, so at
-    // corpus scale every bucket holds n/256 docs and the candidate join
-    // is quadratic regardless of data; 16-bit pair keys make buckets
-    // 256× finer for 3.5× more keys, with the hamming ≤ 6 pigeonhole
-    // guarantee intact (≥2 clean bands ⇒ their pair key matches).
     val combos = for { i <- 0 until 8; j <- (i + 1) until 8 } yield (i, j)
-    val banded = sh.select(col("doc_id"), col("sh64"),
+    val banded = sh.select(col("doc_id"),
       explode(array(combos.map { case (i, j) =>
         struct(lit(i * 8 + j).as("band"),
           (shiftright(col("sh64"), i * 8).bitwiseAND(lit(255L)) * lit(256L) +
             shiftright(col("sh64"), j * 8).bitwiseAND(lit(255L))).as("key"))
       }: _*)).as("bk"))
-      .select(col("doc_id"), col("sh64"), col("bk.band").as("band"), col("bk.key").as("key"))
-    // A near-identical corpus makes band buckets FAT: the raw equi-join
-    // yields millions of (a,b) tuples for thousands of distinct pairs
-    // (measured 2.9M → 24k on the 500-doc test corpus). So dedupe the
-    // NARROW (a,b) first, then broadcast the fingerprint table back for
-    // the hamming verify — never drag fingerprints through the candidate
-    // multiset's shuffle.
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("a"))
-    val r = banded.select(col("band").as("band_r"), col("key").as("key_r"),
-      col("doc_id").as("b"))
-    val pairs = l.join(r, col("band") === col("band_r") && col("key") === col("key_r")
-        && col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    // no broadcast hint: at corpus scale the fingerprint table is huge and
-    // the CANDIDATE side is the small one — AQE picks the right side
-    val sh64 = sh
-    pairs
-      .join(sh64.select(col("doc_id").as("a"), col("sh64").as("sh_a")), "a")
-      .join(sh64.select(col("doc_id").as("b"), col("sh64").as("sh_b")), "b")
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    Candidates.withEnds(Candidates.pairs(banded, Seq("band", "key"), "doc_id"),
+        sh, "doc_id", "sh64")
       .select(col("a"), col("b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+        bit_count(col("sh64_a").bitwiseXOR(col("sh64_b"))).as("hamming"))
       .withColumn("is_dup", (col("hamming") <= maxHamming).cast("int"))
   }
 
@@ -228,15 +179,9 @@ object Dedup {
     * clusters (near-cliques) keep tiny.
     */
   def resolveKeepers(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    // checkpoint the pair list FIRST: the symmetric union references it
-    // twice, so checkpointing only the union ran the entire upstream
-    // candidate-generation pipeline twice
-    val p = pairs.localCheckpoint()
-    val edges = p.select(col("a").as("x"), col("b").as("y"))
-      .union(p.select(col("b").as("x"), col("a").as("y")))
-      .localCheckpoint()
+    val edges = symmetricEdges(pairs)
     val init = edges.select(col("x")).distinct().withColumn("keeper", col("x"))
-    propagateMin(edges, init, maxIters, identity)
+    propagateMin(edges, init, maxIters)
       .select(col("x").as("doc_id"), col("keeper"))
   }
 
@@ -255,19 +200,27 @@ object Dedup {
     */
   def resolveKeepersBy(pairs: DataFrame, priority: DataFrame,
       maxIters: Int = 50): DataFrame = {
-    // see resolveKeepers: checkpoint before the symmetric self-union
-    val p = pairs.localCheckpoint()
-    val edges = p.select(col("a").as("x"), col("b").as("y"))
-      .union(p.select(col("b").as("x"), col("a").as("y")))
-      .localCheckpoint()
+    val edges = symmetricEdges(pairs)
     val init = edges.select(col("x")).distinct()
       .join(priority.select(col("doc_id").as("x"),
         col("prio").cast("long").as("prio")), Seq("x"), "left")
       .select(col("x"),
         struct((-coalesce(col("prio"), lit(0L))).as("np"),
           col("x").as("id")).as("keeper"))
-    propagateMin(edges, init, maxIters, _.getField("id"))
+    propagateMin(edges, init, maxIters)
       .select(col("x").as("doc_id"), col("keeper.id").as("keeper"))
+  }
+
+  /** The (a, b) pair list as materialized symmetric (x, y) edges. The
+    * pairs are checkpointed FIRST: the symmetric union references them
+    * twice, so checkpointing only the union ran the entire upstream
+    * candidate-generation pipeline twice.
+    */
+  private def symmetricEdges(pairs: DataFrame): DataFrame = {
+    val p = pairs.localCheckpoint()
+    p.select(col("a").as("x"), col("b").as("y"))
+      .union(p.select(col("b").as("x"), col("a").as("y")))
+      .localCheckpoint()
   }
 
   /** Min-label propagation to a true fixed point over any orderable label
@@ -278,11 +231,10 @@ object Dedup {
     * rounds) was implemented and MEASURED SLOWER on every resolve query —
     * the LSH/cluster-verified dup components have diameter 3–4, so
     * jumping saves at most one round while adding a label-table self-join
-    * to every round. `labelNode` (label → node id) is kept in the
-    * signature for symmetry with the struct-label mode.
+    * to every round.
     */
   private def propagateMin(edges: DataFrame, init: DataFrame,
-      maxIters: Int, labelNode: Column => Column): DataFrame = {
+      maxIters: Int): DataFrame = {
     var labels = init.localCheckpoint()
     var converged = false
     var it = 0

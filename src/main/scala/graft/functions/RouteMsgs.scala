@@ -3,7 +3,8 @@ package graft.functions
 import graft.model.Model
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -27,7 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * query) and plan readability. Same construction as [[MapRows]].
   *
   * Inputs (children, in order): kind, suppressed, stmt, field_names, vals,
-  * committed (= matched && txn_id IS NOT NULL).
+  * committed (= matched && txn_id IS NOT NULL) — typed string, boolean,
+  * string, array<string>, array<array<string>>, boolean. A mis-typed child
+  * fails analysis (DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE, naming its
+  * position and required type), never a per-row ClassCastException in
+  * `eval`.
   *
   * Output: array<struct< event_type, row_repr, old_repr, new_repr,
   * mapping_notice, new_mapping_notice, query, row_entries, old_entries,
@@ -60,6 +65,10 @@ case class RouteMsgs(children: Seq[Expression], withEntries: Boolean = true)
     StructField("new_entries", ArrayType(entryType, containsNull = false))))
 
   override def dataType: DataType = ArrayType(msgType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExpectsInputTypes.checkInputDataTypes(children, Seq(StringType, BooleanType,
+      StringType, ArrayType(StringType), ArrayType(ArrayType(StringType)), BooleanType))
   override def nullable: Boolean = true
 
   private val etQuery = UTF8String.fromString(Model.EventType.Query)

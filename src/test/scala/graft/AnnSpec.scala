@@ -1,6 +1,7 @@
 package graft
 
 import graft.ann.Similarity
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** ANN operator checks beyond the DuckDB oracles: centroid training
@@ -9,6 +10,41 @@ import org.apache.spark.sql.functions._
 class AnnSpec extends SparkSpec {
 
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+  /** Sequential-fold dot product: the HOF formulation CosineSim fuses (and
+    * the DuckDB oracles' list_reduce(list_transform(...)) mirrors).
+    */
+  private def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  test("fused CosineSim ≡ HOF sequential-fold cosine, bit for bit, nulls included") {
+    def hofCosine(a: Column, b: Column): Column =
+      dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+    val e = transform(col("embedding"), x => x.cast("double"))
+    val vecs = emb.filter(col("vec_id") < 40).select(col("vec_id"), e.as("e"))
+    val rows = vecs.select(col("vec_id").as("a"), col("e").as("ea"))
+      .crossJoin(vecs.select(col("vec_id").as("b"), col("e").as("eb")))
+      .select(col("a"), col("b"),
+        Similarity.cosine(col("ea"), col("eb")).as("fused"),
+        hofCosine(col("ea"), col("eb")).as("hof"))
+      .collect()
+    assert(rows.length == 1600)
+    rows.foreach { r =>
+      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(2)) ==
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)),
+        s"(${r.getLong(0)}, ${r.getLong(1)}): fused ${r.getDouble(2)} hof ${r.getDouble(3)}")
+    }
+    // unequal lengths (zip_with pads with null) and a null element both
+    // propagate to a null cosine in either formulation
+    import spark.implicits._
+    val edge = Seq(
+      (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](1.0)),
+      (Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](1.0, 2.0)))
+      .toDF("x", "y")
+      .select(Similarity.cosine(col("x"), col("y")), hofCosine(col("x"), col("y")))
+      .collect()
+    assert(edge.forall(r => r.isNullAt(0) && r.isNullAt(1)), edge.mkString(", "))
+  }
 
   test("fused SrpBucket ≡ HOF zip_with/aggregate plane projection") {
     // the md5-plane HOF formulation SrpBucket replaced (and the DuckDB

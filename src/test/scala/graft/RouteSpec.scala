@@ -201,6 +201,32 @@ class RouteSpec extends SparkSpec {
     assert(diff.isEmpty, s"RouteMsgs diverges from legacy tree: ${diff.mkString("\n")}")
   }
 
+  test("RouteMsgs rejects a mis-typed child at analysis with a named error") {
+    val turns = mkTurns(Seq(("c1", 1, "user", "EVENT commit xid=1", "search")))
+    val kind = col("role")
+    val suppressed = lit(false)
+    val names = array(col("tool"))
+    val vals = array(array(col("tool")))
+    val committed = lit(true)
+    // well-typed children analyze
+    turns.select(graft.functions.RouteMsgs(kind, suppressed, col("text"), names,
+      vals, committed, withEntries = true))
+    // committed as an int, vals one array level short, kind as an int
+    Seq(
+      ("6th", "\"BOOLEAN\"") -> graft.functions.RouteMsgs(kind, suppressed, col("text"), names,
+        vals, lit(1), withEntries = true),
+      ("5th", "\"ARRAY<ARRAY<STRING>>\"") -> graft.functions.RouteMsgs(kind, suppressed, col("text"), names,
+        names, committed, withEntries = true),
+      ("first", "\"STRING\"") -> graft.functions.RouteMsgs(col("turn_idx"), suppressed,
+        col("text"), names, vals, committed, withEntries = false))
+      .foreach { case ((param, required), msgs) =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](turns.select(msgs))
+        assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+        assert(e.getMessage.contains(s"The $param parameter requires the $required type"),
+          e.getMessage)
+      }
+  }
+
   test("conservation ledger: every turn accounted (F09/A1)") {
     val enriched = Pipeline.enriched(
       Transcripts.fromEvents(spark, "/root/testdata/sf0.001"),
