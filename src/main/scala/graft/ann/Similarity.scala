@@ -144,17 +144,18 @@ object Similarity {
   def trainCentroids(emb: DataFrame, k: Int, iters: Int = 1,
       sampleN: Int = 4096): DataFrame = {
     // orderBy+limit plans as TakeOrderedAndProject — a distributed top-N,
-    // NOT a global single-partition sort; the window ranks only the ≤sampleN
-    // surviving rows.
+    // NOT a global single-partition sort. The ≤k seeds are numbered without
+    // an unpartitioned window: one array sorted by the same (h, vec_id)
+    // key, posexploded.
     val sample = emb
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"),
         md5(col("vec_id").cast("string")).as("h"))
       .orderBy(col("h"), col("vec_id"))
       .limit(sampleN)
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("h"), col("vec_id"))))
-    val seeds = sample.filter(col("rk") <= k)
-      .select((col("rk") - 1).cast("long").as("cent_id"), col("emb").as("cent_emb"))
+    val seeds = sample.orderBy(col("h"), col("vec_id")).limit(k)
+      .agg(array_sort(collect_list(struct(col("h"), col("vec_id"), col("emb")))).as("s"))
+      .select(posexplode(col("s")).as(Seq("pos", "seed")))
+      .select(col("pos").cast("long").as("cent_id"), col("seed.emb").as("cent_emb"))
     var cents = seeds
     (1 to iters).foreach { _ =>
       // Row-local best-centroid pick — the [[assignCentroids]] shape

@@ -49,7 +49,6 @@ object Dedup {
     * profiled ~150× slower.
     */
   def minhashSigs(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
     docs
       .filter(size(TextAnalysis.tokens(col("text"))) >= 3)
       .select(col("doc_id"),
@@ -262,7 +261,6 @@ object Dedup {
     * (first 8 md5 bytes). One compiled pass per doc ([[graft.functions.SimHashSig]]).
     */
   def simhashDocs(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashSig.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.SimHashSig(TextAnalysis.tokens(col("text"))).as("sh64"))
   }

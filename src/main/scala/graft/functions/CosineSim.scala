@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -29,8 +29,9 @@ import org.apache.spark.sql.types._
   * null propagates through the fold to a null cosine).
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -63,15 +64,6 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  val Name = "graft_cosine"
-
-  /** SQL-name registration (optional — the Column API below is
-    * self-contained; register only to call `graft_cosine(...)` from SQL).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-
   /** Column API, self-contained (ADVICE r03: the registry-routed form made
     * external callers fail analysis unless an internal entry point had
     * registered the name first). Inputs: two array<double> columns.

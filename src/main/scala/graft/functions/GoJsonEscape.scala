@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * allocation-light scalar — so the expression is pipelined like any
   * built-in and never breaks the codegen span.
   */
-case class GoJsonEscape(child: Expression) extends UnaryExpression {
+case class GoJsonEscape(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
 
   override def nullSafeEval(input: Any): Any =
@@ -33,18 +34,14 @@ case class GoJsonEscape(child: Expression) extends UnaryExpression {
 }
 
 object GoJsonEscape {
-
-  val Name = "go_json_escape"
-
-  /** Register in the session's FunctionRegistry (needed once per session;
-    * idempotent) so the expression is usable from both the Column API and
-    * SQL text.
+  /** No-op, kept only so existing callers still compile: the Column API
+    * below needs no set-up, and the SQL name comes from
+    * [[graft.GraftExtensions]].
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => GoJsonEscape(exprs.head), "built-in")
+  @deprecated("the Column API needs no registration; for SQL use graft.GraftExtensions", "0.1.0")
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = ()
 
-  /** Column API: `go_json_escape(col)` (requires [[register]]). */
+  /** Column API, self-contained; input: string. */
   def apply(c: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(GoJsonEscape(GraftExpressionBridge.expression(c)))

@@ -3,7 +3,7 @@ package graft.functions
 import graft.model.Model
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -31,7 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB oracles).
   */
 case class MapRows(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
+
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(StringType), ArrayType(ArrayType(StringType)))
 
   private val entryType = StructType(Seq(
     StructField("k", StringType), StructField("v", StringType)))
@@ -60,8 +63,6 @@ case class MapRows(left: Expression, right: Expression)
 }
 
 object MapRows {
-  val Name = "graft_map_rows"
-
   private val noticeLonger = UTF8String.fromString(Model.NoticeRowLonger)
   private val noticeShorter = UTF8String.fromString(Model.NoticeRowShorter)
   private val noticeNone = UTF8String.fromString("")
@@ -117,11 +118,9 @@ object MapRows {
       if (withEntries) new GenericArrayData(entries) else null)
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => MapRows(exprs(0), exprs(1)), "built-in")
-
-  /** Column API, self-contained (no prior [[register]] needed). */
+  /** Column API, self-contained; inputs: array<string> names,
+    * array<array<string>> vals.
+    */
   def apply(names: Column, vals: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(MapRows(GraftExpressionBridge.expression(names),

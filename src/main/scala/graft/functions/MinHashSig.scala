@@ -2,10 +2,11 @@ package graft.functions
 
 import graft.dedup.Dedup
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom expression computing the full MinHash signature from a token
   * array in one compiled pass: token 3-gram shingling, md5-based 32-bit
@@ -23,23 +24,21 @@ import org.apache.spark.sql.types._
   * don't affect minima, so no distinct-set is materialized.
   */
 case class MinHashSig(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(toksAny: Any): Any = {
     val toks = toksAny.asInstanceOf[ArrayData]
     val n = toks.numElements()
     val sig = Array.fill(Dedup.NumHashes)(Long.MaxValue)
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = MinHashSig.md5.get()
     var i = 0
     while (i + 2 < n) {
-      val shingle =
-        toks.getUTF8String(i).toString + " " +
-        toks.getUTF8String(i + 1).toString + " " +
-        toks.getUTF8String(i + 2).toString
-      md.reset()
-      val d = md.digest(shingle.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // the shingle's UTF-8 bytes, joined without a String round-trip
+      val d = md.digest(UTF8String.concat(toks.getUTF8String(i), MinHashSig.space,
+        toks.getUTF8String(i + 1), MinHashSig.space, toks.getUTF8String(i + 2)).getBytes)
       val x = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
         ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
       var j = 0
@@ -58,13 +57,11 @@ case class MinHashSig(child: Expression)
 }
 
 object MinHashSig {
-  val Name = "graft_minhash_sig"
+  private val space = UTF8String.fromString(" ")
+  // one digest per thread, not one provider lookup per row
+  private val md5 = ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => MinHashSig(exprs.head), "built-in")
-
-  /** Column API (requires [[register]]); input: token array. */
+  /** Column API, self-contained; input: token array. */
   def apply(tokens: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(MinHashSig(GraftExpressionBridge.expression(tokens)))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -33,8 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - empty group → one empty value (split semantics, matches old chain)
   */
 case class ParseVals(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType =
     ArrayType(ArrayType(StringType, containsNull = false), containsNull = false)
 
@@ -105,15 +106,11 @@ case class ParseVals(child: Expression)
 }
 
 object ParseVals {
-  val Name = "graft_parse_vals"
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => ParseVals(exprs.head), "built-in")
-
-  /** Column API (requires [[register]]). */
-  def apply(payload: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, payload)
+  /** Column API, self-contained; input: the `vals=` payload string. */
+  def apply(payload: Column): Column = {
+    import org.apache.spark.sql.GraftExpressionBridge
+    GraftExpressionBridge.column(ParseVals(GraftExpressionBridge.expression(payload)))
+  }
 
   /** Escape a raw value for embedding in the `vals=` grammar (generator /
     * test-fixture side; the parser above inverts it).

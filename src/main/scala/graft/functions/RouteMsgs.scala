@@ -3,7 +3,6 @@ package graft.functions
 import graft.model.Model
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -48,7 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    uncommitted) → empty array
   */
 case class RouteMsgs(children: Seq[Expression], withEntries: Boolean = true)
-    extends Expression with CodegenFallback {
+    extends Expression with ExpectsInputTypes with CodegenFallback {
 
   private val entryType = StructType(Seq(
     StructField("k", StringType), StructField("v", StringType)))
@@ -66,9 +65,8 @@ case class RouteMsgs(children: Seq[Expression], withEntries: Boolean = true)
 
   override def dataType: DataType = ArrayType(msgType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    ExpectsInputTypes.checkInputDataTypes(children, Seq(StringType, BooleanType,
-      StringType, ArrayType(StringType), ArrayType(ArrayType(StringType)), BooleanType))
+  override def inputTypes: Seq[DataType] = Seq(StringType, BooleanType,
+    StringType, ArrayType(StringType), ArrayType(ArrayType(StringType)), BooleanType)
   override def nullable: Boolean = true
 
   private val etQuery = UTF8String.fromString(Model.EventType.Query)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -24,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens.
   */
 case class ShingleSet(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def nullSafeEval(toksAny: Any): Any = {
@@ -53,7 +54,7 @@ case class ShingleSet(child: Expression)
 }
 
 object ShingleSet {
-  /** Column API; input: token array. Self-contained (no registration). */
+  /** Column API, self-contained; input: token array. */
   def apply(tokens: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(ShingleSet(GraftExpressionBridge.expression(tokens)))

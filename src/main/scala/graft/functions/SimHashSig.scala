@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -29,8 +29,9 @@ import org.apache.spark.sql.types._
   * semantics agree across engines.
   */
 case class SimHashSig(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
 
   override def nullSafeEval(toksAny: Any): Any = {
@@ -69,13 +70,7 @@ case class SimHashSig(child: Expression)
 }
 
 object SimHashSig {
-  val Name = "graft_simhash_sig"
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SimHashSig(exprs.head), "built-in")
-
-  /** Column API (requires [[register]]); input: token array. */
+  /** Column API, self-contained; input: token array. */
   def apply(tokens: Column): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(SimHashSig(GraftExpressionBridge.expression(tokens)))

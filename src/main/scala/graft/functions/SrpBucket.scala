@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -28,8 +28,9 @@ import org.apache.spark.sql.types._
   * fusion pattern.
   */
 case class SrpBucket(child: Expression, nPlanes: Int, planeOffset: Int = 0)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = LongType
 
   // (plane, dim) components, computed on first eval for the observed

@@ -107,17 +107,19 @@ object TextAnalysis {
     * deterministic tie-break (token asc) — the tokenizer-training /
     * stopword-mining view of the corpus. One explode + partial-aggregated
     * count + distributed top-N (`orderBy.limit` plans as
-    * TakeOrderedAndProject — never a global sort of the vocabulary).
+    * TakeOrderedAndProject — never a global sort of the vocabulary); the
+    * ≤k survivors are ranked without an unpartitioned window, as one array
+    * sorted by the same (n desc, token asc) key, posexploded.
     * Output: (token, n, rank).
     */
-  def vocab(docs: DataFrame, k: Int = 50): DataFrame = {
-    val counts = docs.select(explode(tokens(col("text"))).as("token"))
+  def vocab(docs: DataFrame, k: Int = 50): DataFrame =
+    docs.select(explode(tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token").asc).limit(k)
-    counts.withColumn("rank", row_number().over(
-      org.apache.spark.sql.expressions.Window
-        .orderBy(col("n").desc, col("token").asc)))
-  }
+      .agg(array_sort(collect_list(struct((-col("n")).as("neg_n"), col("token")))).as("top"))
+      .select(posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("t.token").as("token"), (-col("t.neg_n")).as("n"),
+        (col("pos") + 1).as("rank"))
 
   /** Per-document top-`k` TF-IDF terms — the keyword/topic view every
     * retrieval or curation pipeline wants next to raw counts. The IDF is

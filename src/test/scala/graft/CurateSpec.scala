@@ -174,6 +174,12 @@ class CurateSpec extends SparkSpec {
     assert(v.agg(sum("n")).collect()(0).getLong(0) == total)
     val p = plan(TextAnalysis.vocab(docs, k = 10))
     assert(p.contains("TakeOrderedAndProject"), s"top-N must be distributed:\n$p")
+    // ranks 1..k follow (n desc, token asc), ties included
+    val s = spark
+    import s.implicits._
+    val tied = TextAnalysis.vocab(Seq("b a c", "a b d", "c").toDF("text"), k = 3).collect()
+      .map(r => (r.getAs[String]("token"), r.getAs[Long]("n"), r.getAs[Int]("rank")))
+    assert(tied.sortBy(_._3).toSeq == Seq(("a", 2L, 1), ("b", 2L, 2), ("c", 2L, 3)))
   }
 
   test("mix: weighted stride interleave — heavier sources appear proportionally earlier") {

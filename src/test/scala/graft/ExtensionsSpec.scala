@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** The `spark.sql.extensions=graft.GraftExtensions` integration point: a
   * session built with the extensions class must expose every fused graft
-  * expression to SQL TEXT with no Column-API or `register` call anywhere.
+  * expression to SQL TEXT, and the extension is the only thing that names
+  * them — the Column API never touches the session function registry.
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -78,6 +80,45 @@ class ExtensionsSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("literal integer"),
         s"unexpected message: ${e.getMessage}")
+    }
+  }
+
+  test("a mis-typed argument fails at analysis for every SQL name") {
+    val misTyped = Seq(
+      "graft_cosine(array('a'), array('b'))",
+      "go_json_escape(array('x'))",
+      "graft_parse_vals(array('x'))",
+      "graft_map_rows(array('c1'), array('x'))",
+      "graft_minhash_sig(array(1, 2, 3))",
+      "graft_simhash_sig('a b c')",
+      "graft_shingle_set(array(1.0d))",
+      "graft_srp_bucket(array('a'), 4)")
+    assert(misTyped.map(_.takeWhile(_ != '(')).toSet ==
+      GraftExtensions.sqlFunctions.map(_._1).toSet)
+    withExtensionsSession { s =>
+      misTyped.foreach { call =>
+        val e = intercept[AnalysisException](s.sql(s"SELECT $call"))
+        assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), s"$call: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("library calls leave a fresh session's function registry untouched") {
+    val s = spark.newSession()
+    import s.implicits._
+    val turns = Seq(
+      graft.model.Turn("c1", 1, "user", "EVENT insert rows=1 vals=[1|a|b]", "search", t0),
+      graft.model.Turn("c1", 2, "user", "EVENT query stmt=DROP TABLE `x`", "search", t0),
+      graft.model.Turn("c1", 3, "user", "EVENT commit xid=7", "search", t0)).toDF()
+    val routed = Pipeline.routed(turns, graft.sources.Transcripts.lookup(s))
+    assert(routed.select(graft.functions.CanonicalJson.jsonColumnCompact).count() == 2)
+    val docs = Seq((1L, "the quick brown fox jumps"), (2L, "the quick brown fox sleeps"))
+      .toDF("doc_id", "text")
+    assert(graft.dedup.Dedup.minhashSigs(docs).count() == 2)
+    assert(graft.dedup.Dedup.simhashDocs(docs).count() == 2)
+    val registry = s.sessionState.functionRegistry
+    GraftExtensions.sqlFunctions.foreach { case (name, _, _) =>
+      assert(!registry.functionExists(FunctionIdentifier(name)), s"$name was registered")
     }
   }
 }

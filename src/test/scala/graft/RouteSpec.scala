@@ -140,7 +140,6 @@ class RouteSpec extends SparkSpec {
     // branch (query kept/suppressed, insert multi-row, delete, update
     // pairing incl. per-side notices, odd-update quarantine, mismatch
     // renames, unmapped, uncommitted, noise) exercised by the fixture
-    graft.functions.MapRows.register(spark)
     val entriesType = "array<struct<k:string,v:string>>"
     val nullStr = lit(null).cast("string")
     val nullEntries = lit(null).cast(entriesType)
